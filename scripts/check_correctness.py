@@ -21,6 +21,10 @@ for p in glob.glob(f"{sfdir}/*.parquet"):
 
 oracle = json.load(open(f"{outdir}/oracle_sql.json"))
 fail, okn, skipped = [], 0, []
+# a query that threw in Verify leaves no directory, only this entry
+failures = f"{outdir}/failures.json"
+if os.path.exists(failures):
+    fail += [(n, f"Verify: {m}") for n, m in json.load(open(failures)).items()]
 for name in sorted(os.listdir(outdir)):
     d = os.path.join(outdir, name)
     if not os.path.isdir(d):

@@ -74,12 +74,11 @@ for table, repl in plans.items():
     # 600 M-row lineitem wrote ~30,000 row groups into ONE 11 GB file,
     # and Spark's per-split footer parse (full-footer thrift, once per
     # input split) collapsed the x1000 scan floor to 223 MB/s / 18.8x
-    # DuckDB (r15 weak set; root-caused by graft.ProfileScanFloor's
-    # layout A/B in SCANFLOOR.json). Production rule: target >=256 row
-    # groups per table for parallelism, clamp to [20k, 122,880] rows,
-    # and cap files at 512 MB so no footer ever describes more than a
-    # few hundred row groups. The old layout is kept as a disclosed
-    # adversarial probe by gen_layouts.py, not as the benchmark corpus.
+    # DuckDB (r15 weak set; root-caused by a row-group/file-count
+    # layout A/B, results in SCANFLOOR.json). Production rule: target
+    # >=256 row groups per table for parallelism, clamp to
+    # [20k, 122,880] rows, and cap files at 512 MB so no footer ever
+    # describes more than a few hundred row groups.
     rg = max(20000, min(122880, total // 256))
     con.execute(f"COPY ({q}) TO '{out}' (FORMAT PARQUET, ROW_GROUP_SIZE {rg}, "
                 f"FILE_SIZE_BYTES '512MB')")

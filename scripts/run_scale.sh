@@ -79,7 +79,7 @@ if [ -d /tmp/scale/x2000 ]; then
   idle_wait
   SPARK_DRIVER_MEM=32g \
   SPARK_GRAFT_ONLY=salted_join,q3_shipping,pack_sequences,minhash_neardups,simhash_neardups,minhash_bands,dedup_clusters,lang_stopwords,sessionize,a6_pricing_summary,heavy_hitters,a1_sum \
-  SPARK_GRAFT_SKIP_BLOCKS=vector,skew_join_planted,proximity_count_ab,segmenter_sustained,streaming_state_sustained,tail_attribution,ts_decode_ab,a8_fixed_cost,asof_floor,join_floor_profile,dense_lookup_ab,a6_floor_ab \
+  SPARK_GRAFT_SKIP_BLOCKS=vector,skew_join_planted,proximity_count_ab,segmenter_sustained,streaming_state_sustained,tail_attribution,ts_decode_ab,a8_fixed_cost,asof_floor,dense_lookup_ab,a6_floor_ab \
     run_point /tmp/scale/x2000 /tmp/scale/bench_x2000.json
   X2000_POINT="2000x sf0.1 (34 GB, heavy family, input > heap)=/tmp/scale/bench_x2000.json"
 else

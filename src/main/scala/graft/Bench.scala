@@ -785,19 +785,6 @@ object Bench {
           (graft.plans.StringCount.countChar(col("text"), ' ') + 1).as("toks"))
         .agg(count(lit(1)), bit_xor(col("toks"))))
       val packFull = timed3(SparkEntry.queries("pack_sequences")(spark, sfDir))
-      // the rejected blocked-prefix-sum alternative, priced every run
-      // (r18 A/B: exchange + WindowExec row cost dominate, not sort
-      // parallelism — see Packing.packSequencesBlocked scaladoc)
-      val packBlocked = timed3 {
-        val d2 = docs.select(col("doc_id"),
-          pmod(col("doc_id"), lit(8)).as("shard"),
-          (graft.plans.StringCount.countChar(col("text"), ' ') + 1).as("toks"))
-        graft.operators.Packing.packSequencesBlocked(d2, col("shard"),
-            col("doc_id"), col("toks"), 2048L)
-          .groupBy("shard", "seq_id")
-          .agg(count(lit(1)).as("n_docs"), sum("toks").as("n_tokens"))
-          .coalesce(1).sortWithinPartitions(col("shard"), col("seq_id"))
-      }
       // simhash: sketch-only scan, + distinct-sketch groups, committed
       val simSketch = timed3(docs.select(
           graft.operators.Dedup.simhash(col("text")).as("sk"))
@@ -815,7 +802,7 @@ object Bench {
       val mbFull = timed3(SparkEntry.queries("minhash_bands")(spark, sfDir))
       def pct(stage: Double, full: Double): String =
         "%.0f".format(100.0 * math.min(stage, full) / math.max(full, 1e-9))
-      s""","dedup_stage_floor":{"pack_scan_tokencount_s":${"%.3f".format(packScan)},"pack_full_s":${"%.3f".format(packFull)},"pack_blocked_alternative_s":${"%.3f".format(packBlocked)},"simhash_sketch_scan_s":${"%.3f".format(simSketch)},"simhash_plus_groups_s":${"%.3f".format(simGroups)},"simhash_full_s":${"%.3f".format(simFull)},"minhash_bands_udf_scan_s":${"%.3f".format(mbSketch)},"minhash_bands_full_s":${"%.3f".format(mbFull)},"verdict":"sketch/tokenize scan share: pack ${pct(packScan, packFull)}%, simhash ${pct(simSketch, simFull)}%, minhash ${pct(mbSketch, mbFull)}% — pack residual is exchange+WindowExec (blocked alternative priced above, rejected), sketch residuals are shuffle/join work"}"""
+      s""","dedup_stage_floor":{"pack_scan_tokencount_s":${"%.3f".format(packScan)},"pack_full_s":${"%.3f".format(packFull)},"simhash_sketch_scan_s":${"%.3f".format(simSketch)},"simhash_plus_groups_s":${"%.3f".format(simGroups)},"simhash_full_s":${"%.3f".format(simFull)},"minhash_bands_udf_scan_s":${"%.3f".format(mbSketch)},"minhash_bands_full_s":${"%.3f".format(mbFull)},"verdict":"sketch/tokenize scan share: pack ${pct(packScan, packFull)}%, simhash ${pct(simSketch, simFull)}%, minhash ${pct(mbSketch, mbFull)}% — pack residual is exchange+WindowExec, sketch residuals are shuffle/join work"}"""
     } catch { case e: Throwable =>
       System.err.println(s"[bench] dedup stage floor FAILED: ${e.getMessage}"); ""
     }
@@ -1154,44 +1141,6 @@ object Bench {
       } catch { case e: Throwable =>
         System.err.println(s"[bench] probe degradation FAILED: ${e.getMessage}"); ""
       }
-
-    // Join-family wall attribution (round-11 judge item #1: the
-    // q3/j4/j1/salted/asof gap vs DuckDB was ATTRIBUTED to "the
-    // broadcast build floor" for two rounds without a measurement).
-    // Per query: job-interval union (cluster work) vs driver-only time,
-    // with the BroadcastExchange driver chain (collect+build+transmit)
-    // measured from the executed plan's own metrics — at the x100
-    // point the serial driver-side hash-relation build is 60-70% of
-    // j4/salted/j1's wall. The SHUFFLE_HASH counterfactual (parallel
-    // partitioned build, fact exchanged) is timed next to it: it loses
-    // 2-4×, so the broadcast form IS the right local plan and the
-    // build is a floor, not a defect. Best-of-2 attributed runs.
-    // a8_interpolate joined the target list in r13 (judge item #2: the
-    // only weak entry with no measurement behind its floor note) — its
-    // attribution separates the events-scan job from the tiny
-    // window-chain tail, making it commensurable with the scan_floor
-    // block above.
-    val joinFloor = if (!blockOn("join_floor_profile")) "" else try {
-      awaitCalm(maxLoad = 2.0, budgetSec = 240)
-      val targets = Seq("j1_equijoin", "j4_semijoin", "q3_shipping",
-        "salted_join", "asof_join", "a8_interpolate")
-      val perQuery = targets.map { n =>
-        val q = SparkEntry.queries(n)
-        q(spark, sfDir).write.mode("overwrite").format("noop").save() // warm
-        val best = (1 to 2).map(_ => ProfileJoin.attribute(spark)(q(spark, sfDir)))
-          .minBy(_.wallSec)
-        s""""$n":${best.json}"""
-      }
-      val shj = ProfileJoin.shjVariants(spark, sfDir).map { case (n, mk) =>
-        mk().write.mode("overwrite").format("noop").save() // warm
-        val best = (1 to 2).map(_ => ProfileJoin.attribute(spark)(mk()))
-          .minBy(_.wallSec)
-        s""""$n":${"%.3f".format(best.wallSec)}"""
-      }
-      s""","join_floor_profile":{${perQuery.mkString(",")},"shuffle_hash_counterfactual_wall_s":{${shj.mkString(",")}}}"""
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] join-floor profile FAILED: ${e.getMessage}"); ""
-    }
 
     // Segmenter throughput under sustained load (r9 judge item #7):
     // a ~20 s rate-source run over 10k live sessions, 1% of which
@@ -1706,7 +1655,7 @@ object Bench {
     val headline =
       s""""value":${"%.3f".format(wallPar)},"unit":"sec","schema_version":8,"run_head":${runHead.map("\"" + _ + "\"").getOrElse("null")},"run_tree_dirty":$treeDirty,"wall_par${par}_postwarm_sec":${"%.3f".format(wallPar)},"wall_par${par}_coldplans_sec":${"%.3f".format(wallParCold)},"wall_seq_warm_sec":${"%.3f".format(wallSeq)},"sum_query_sec":${"%.3f".format(good.map(_.sec).sum)},"parallelism":$par,"n_queries":${outSeq.size},"queries_methodology":"seq_warm_par1_min2_min3_top15_and_ge0p8","jvm_max_heap_mb":${Runtime.getRuntime.maxMemory() >> 20},"idle_gate":$gate,"load_before":$loadBefore,"load_after":$loadAfter"""
     val json =
-      s"""{"metric":"total",$headline,"queries":$qs,"errors":$errs,"errors_par_only":$parOnlyErrs,"excluded_queries":$excludedJson$onlyJson,"skipped_blocks":${skippedBlocks.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")}$duck$vector$skew$pcAb$scanFloor$dljAb$a6Floor$q3Floor$asofFloor$a8Fixed$probePaths$probeDegrade$tsDecodeAb$dedupStage$joinFloor$segTp$stState$clusterProbe$suiteFixedCost$priorCmp,"sf":"$sfDir"}"""
+      s"""{"metric":"total",$headline,"queries":$qs,"errors":$errs,"errors_par_only":$parOnlyErrs,"excluded_queries":$excludedJson$onlyJson,"skipped_blocks":${skippedBlocks.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")}$duck$vector$skew$pcAb$scanFloor$dljAb$a6Floor$q3Floor$asofFloor$a8Fixed$probePaths$probeDegrade$tsDecodeAb$dedupStage$segTp$stState$clusterProbe$suiteFixedCost$priorCmp,"sf":"$sfDir"}"""
     Files.writeString(
       Paths.get(sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_LOCAL.json")), json)
     // committed full-artifact sidecar (r16 judge item #3): the driver's

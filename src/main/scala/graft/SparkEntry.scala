@@ -1107,15 +1107,15 @@ object SparkEntry {
       // the per-sequence summary is small at bench SF (#tokens/2048
       // rows) → orderedSmall for the presentation sort; a final global
       // orderBy re-ran the whole window+agg chain for range sampling
-      // r18 A/B kept the PLAIN window form: the blocked two-level
-      // prefix sum (packSequencesBlocked) was built on the hypothesis
+      // r18 A/B kept the PLAIN window form: a blocked two-level
+      // prefix sum (since deleted) was built on the hypothesis
       // that the 8-shard window serializes the sort — measured FALSE
       // at x1000 (probe: exchange 1.2 s + WindowExec row processing
       // 1.6 s dominate; sortWithinPartitions after the exchange is
       // +0.04 s because scan order is already near-sorted, and a
       // 97×-finer window partitioning made it SLOWER). The blocked
       // form pays the exchange class twice and measured 5.3 s vs
-      // 3.8 s — dedup_stage_floor prices both every run.
+      // 3.8 s (bench_history/BENCH_SCALE_r18.json, dedup_stage_floor).
       // r20 §2.1: PIN the pack exchange's partition count. The window's
       // ENSURE_REQUIREMENTS exchange is AQE-coalescible, and at the
       // GB points the ~120 MB shuffle coalesces to ~2 partitions under

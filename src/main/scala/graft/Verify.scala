@@ -2,7 +2,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare. A query that
+  * throws is listed in failures.json and makes the run exit 1. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
@@ -11,15 +12,37 @@ object Verify {
     // oracle-readable fixture inputs must exist before the driver's
     // DuckDB pass replays oracle_sql.json (tool_calls / grocery family)
     graft.fixtures.Fixtures.materializeForOracle(spark)
-    SparkEntry.queries.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-    }
+    val failures = dumpAll(spark, sfDir, outDir, SparkEntry.queries)
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), oracleSqlJson)
     spark.stop()
+    if (failures.nonEmpty) sys.exit(1)
+  }
+
+  /** Runs every query and writes its result to `outDir/<name>`. A query
+    * that throws leaves no result directory (a stale one from an
+    * earlier run is removed) and is returned as name → message; the
+    * same map is written to `outDir/failures.json`, which exists only
+    * when something failed. */
+  def dumpAll(spark: SparkSession, sfDir: String, outDir: String,
+              queries: Map[String, SparkEntry.Q]): Map[String, String] = {
+    val failures = queries.toSeq.flatMap { case (name, fn) =>
+      try {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
+        None
+      } catch { case e: Throwable =>
+        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        org.apache.commons.io.FileUtils.deleteQuietly(
+          new java.io.File(s"$outDir/$name"))
+        Some(name -> s"${e.getClass.getName}: ${e.getMessage}")
+      }
+    }
+    val report = Paths.get(s"$outDir/failures.json")
+    if (failures.isEmpty) Files.deleteIfExists(report)
+    else Files.writeString(report, failures
+      .map { case (k, v) => s"${jsonQuote(k)}: ${jsonQuote(v)}" }
+      .mkString("{", ",", "}"))
+    failures.toMap
   }
 
   /** JSON string escape: backslash, quote, and ALL control chars (<0x20)

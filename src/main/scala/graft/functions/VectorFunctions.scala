@@ -40,7 +40,7 @@ object VectorFunctions {
   /** Same math as [[cosine]] through the native codegen expression
     * (graft.plans.CosineSimilarity) — one fused loop inside
     * whole-stage codegen instead of interpreted HOF lambdas; 5-100×
-    * faster on 1024-dim scans (see VectorBench). Identical results
+    * faster on 1024-dim scans (Bench's `vector` block). Identical results
     * (sequential double accumulation over float inputs). Built
     * directly from the expression so it resolves on any classic
     * session; `graft_cosine` is also in the registry for SQL use

@@ -21,6 +21,18 @@ class ContractSpec extends SparkSpec {
     }
   }
 
+  test("entry returns at most 10 budgeted hits in score order") {
+    val df = SparkEntry.entry(spark)
+    assert(df.columns.toSeq == Seq("vec_id", "score", "kept_text"))
+    val rows = df.collect()
+    assert(rows.nonEmpty && rows.length <= 10, s"${rows.length} rows")
+    val scores = rows.map(_.getAs[Double]("score"))
+    assert(scores.zip(scores.tail).forall { case (a, b) => a >= b },
+      s"scores not non-increasing: ${scores.toSeq}")
+    val kept = rows.map(r => Option(r.getAs[String]("kept_text")).fold(0)(_.length)).sum
+    assert(kept <= 2000, s"kept_text totals $kept chars")
+  }
+
   test("every VALUES-pinned oracle has a derivation row in PINNED.md") {
     // the pinned class must stay auditable in O(1): a new pin landing
     // without its derivation/falsification entry fails here, not in a

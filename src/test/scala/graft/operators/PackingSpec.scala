@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 /** Sequence packing (concat-and-split): per-shard seq ids must equal a
   * sequential reference fold, and packing must parallelize across
@@ -10,22 +9,31 @@ class PackingSpec extends SparkSpec {
   import spark.implicits._
 
   test("packSequences equals the sequential concat-and-split reference") {
-    val docs = (1L to 40L).map(i => (i, i % 3, 100L + (i % 7) * 50))
-      .toDF("id", "shard", "toks")
-    val got = Packing.packSequences(docs, $"shard", $"id", $"toks", 512L)
-      .select($"shard", $"id", $"seq_id").as[(Long, Long, Long)]
-      .collect().map(r => (r._1, r._2) -> r._3).toMap
-    // sequential reference: running token total per shard
-    val want = (1L to 40L).map(i => (i, i % 3, 100L + (i % 7) * 50))
-      .groupBy(_._2).flatMap { case (shard, rows) =>
+    val rnd = new scala.util.Random(19)
+    // sparse, negative-spanning ids; uneven shards; zero-token docs
+    val fuzzed = (0 until 500).map(_ => rnd.nextLong() % 100000L).distinct
+      .map(i => (i, math.min(math.floorMod(i, 5L), 2L),
+        if (rnd.nextInt(10) == 0) 0L else rnd.nextInt(900).toLong + 1))
+    val inputs = Seq(
+      (1L to 40L).map(i => (i, i % 3, 100L + (i % 7) * 50)) -> 512L,
+      fuzzed -> 777L,
+      Seq.empty[(Long, Long, Long)] -> 777L)
+    for ((rows, budget) <- inputs) {
+      val got = Packing.packSequences(rows.toDF("id", "shard", "toks"),
+          $"shard", $"id", $"toks", budget)
+        .select($"shard", $"id", $"seq_id").as[(Long, Long, Long)]
+        .collect().map(r => (r._1, r._2) -> r._3).toMap
+      // sequential reference: running token total per shard
+      val want = rows.groupBy(_._2).flatMap { case (shard, docs) =>
         var before = 0L
-        rows.sortBy(_._1).map { case (id, _, toks) =>
-          val seq = before / 512L
+        docs.sortBy(_._1).map { case (id, _, toks) =>
+          val seq = before / budget
           before += toks
           (shard, id) -> seq
         }
-      }.toMap
-    assert(got == want)
+      }
+      assert(got == want, s"${rows.size} docs, budget $budget")
+    }
   }
 
   test("seq ids are nondecreasing in pack order and sequences start under budget") {
@@ -36,47 +44,5 @@ class PackingSpec extends SparkSpec {
     // 200-token docs into 1000-token budget: exactly 5 docs per sequence
     assert(rows.count(_ == 0L) == 5)
     assert(rows.max == 19L)
-  }
-
-  test("packSequencesBlocked equals packSequences on fuzzed sparse ids") {
-    val rnd = new scala.util.Random(19)
-    // sparse, negative-spanning ids; uneven shards; zero-token docs
-    val ids = (0 until 500).map(_ => rnd.nextLong() % 100000L).distinct
-    val docs = ids.map(i => (i, math.floorMod(i, 5L),
-        if (rnd.nextInt(10) == 0) 0L else rnd.nextInt(900).toLong + 1))
-      .toDF("id", "shard", "toks")
-    for (buckets <- Seq(1, 3, 32)) {
-      val plain = Packing.packSequences(docs, $"shard", $"id", $"toks", 777L)
-        .select($"shard", $"id", $"seq_id").as[(Long, Long, Long)]
-        .collect().sorted.toSeq
-      val blocked = Packing.packSequencesBlocked(docs, $"shard", $"id",
-          $"toks", 777L, buckets)
-        .select($"shard", $"id", $"seq_id").as[(Long, Long, Long)]
-        .collect().sorted.toSeq
-      assert(blocked == plain, s"buckets=$buckets")
-    }
-    // empty input falls back cleanly
-    assert(Packing.packSequencesBlocked(docs.filter($"id" > 999999L),
-      $"shard", $"id", $"toks", 777L).count() == 0)
-  }
-
-  test("packSequencesFused equals packSequences on fuzzed sparse ids") {
-    val rnd = new scala.util.Random(20)
-    val ids = (0 until 500).map(_ => rnd.nextLong() % 100000L).distinct
-    val docs = ids.map(i => (i, math.floorMod(i, 5L),
-        if (rnd.nextInt(10) == 0) 0L else rnd.nextInt(900).toLong + 1))
-      .toDF("id", "shard", "toks")
-    val plain = Packing.packSequences(docs, $"shard", $"id", $"toks", 777L)
-      .select($"shard", $"id", $"seq_id").as[(Long, Long, Long)]
-      .collect().sorted.toSeq
-    for (width <- Seq(1L, 509L, 1L << 16)) {
-      val fused = Packing.packSequencesFused(docs, $"shard", $"id",
-          $"toks", 777L, width)
-        .select($"shard", $"id", $"seq_id").as[(Long, Long, Long)]
-        .collect().sorted.toSeq
-      assert(fused == plain, s"blockWidth=$width")
-    }
-    assert(Packing.packSequencesFused(docs.filter($"id" > 999999L),
-      $"shard", $"id", $"toks", 777L).count() == 0)
   }
 }
