@@ -26,28 +26,15 @@ import org.apache.spark.sql.SparkSession
   *    emitted in the artifact — self-adjudicating, no prose numbers;
   *  - failed queries are recorded as `"name": -1` in `errors`, never
   *    silently timed as successes.
+  *
+  * Where one query's time goes (scan, probe, aggregate, shuffle) is not
+  * measured here: [[ProfileQuery]] prints the per-operator metrics of
+  * the query's real plan.
   */
 object Bench {
 
-  /** One timed query run: wall seconds plus the JVM-global GC and JIT
-    * time that elapsed during it. Under PAR=1 the deltas are
-    * attributable to the query; under concurrency they are a shared
-    * signal only (disclosed where used). */
-  final case class QRun(name: String, sec: Double, ok: Boolean,
-                        gcMs: Long, jitMs: Long)
-
-  private def gcMillis(): Long = {
-    import scala.jdk.CollectionConverters._
-    java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-      .asScala.map(b => math.max(0L, b.getCollectionTime)).sum
-  }
-
-  private def jitMillis(): Long = {
-    val c = java.lang.management.ManagementFactory.getCompilationMXBean
-    if (c != null && c.isCompilationTimeMonitoringSupported)
-      c.getTotalCompilationTime
-    else 0L
-  }
+  /** One timed query run: wall seconds and whether it succeeded. */
+  final case class QRun(name: String, sec: Double, ok: Boolean)
 
   /** Queries excluded from this run via SPARK_GRAFT_EXCLUDE (comma
     * list) — the x1000 sweep point drops the quadratic-oracle and
@@ -71,9 +58,9 @@ object Bench {
     .filter(q => onlySel.forall(_.contains(q._1)))
 
   /** Extra-measurement blocks skipped via SPARK_GRAFT_SKIP_BLOCKS
-    * (comma list of block keys). The x1000 point skips the
-    * events-quadratic proximity A/B and the scale-independent
-    * streaming re-measurements; the artifact discloses the list. */
+    * (comma list of block keys). The large sweep points skip the
+    * scale-independent vector and streaming re-measurements; the
+    * artifact discloses the list. */
   private val skippedBlocks: Set[String] =
     sys.env.get("SPARK_GRAFT_SKIP_BLOCKS").map(_.split(",").map(_.trim)
       .filter(_.nonEmpty).toSet).getOrElse(Set.empty)
@@ -93,15 +80,13 @@ object Bench {
     val wall0 = System.nanoTime()
     val futures = tasks.map { case (name, fn) =>
       scala.concurrent.Future {
-        val gc0 = gcMillis(); val jit0 = jitMillis()
         val t0 = System.nanoTime()
         val ok =
           try { fn(spark, sfDir).write.mode("overwrite").format("noop").save(); true }
           catch { case e: Throwable =>
             System.err.println(s"[bench] $name FAILED: ${e.getMessage}"); false
           }
-        QRun(name, (System.nanoTime() - t0) / 1e9, ok,
-          gcMillis() - gc0, jitMillis() - jit0)
+        QRun(name, (System.nanoTime() - t0) / 1e9, ok)
       }
     }
     val outcomes = futures.map(f =>
@@ -255,35 +240,6 @@ object Bench {
     if (pr.waitFor() == 0 && out.matches("[0-9a-f]{40}")) Some(out) else None
   } catch { case _: Throwable => None }
 
-  /** Whether the MEASURED code is unchanged between `head` and the
-    * code actually running now: exact-HEAD equality would mark a sweep
-    * stale after any doc/artifact commit (the end-of-round snapshot
-    * always is one), so staleness is defined as a non-empty diff over
-    * the library source and build — against the WORKING TREE, not
-    * HEAD (r17 advisory: a commit-to-commit diff called a bench run
-    * with uncommitted src/main edits "fresh" — the exact
-    * silent-vacuous-comparison this check exists to prevent; with one
-    * commit argument `git diff` compares that commit to the working
-    * tree, covering committed and uncommitted changes alike). `git
-    * diff` never reports UNTRACKED files, so a brand-new uncommitted
-    * source file would read as "unchanged" (r18 advisory — the exact
-    * silent-staleness class this check targets); any untracked hit
-    * under the measured paths is therefore also "changed". Unknown
-    * commits (or no git) read as changed → stale, the safe
-    * direction. */
-  private def sourceUnchangedSince(head: String): Boolean = try {
-    if (!head.matches("[0-9a-f]{40}")) false
-    else {
-      val pr = new ProcessBuilder("git", "diff", "--quiet", head,
-        "--", "src/main", "build.sbt").start()
-      val diffClean = pr.waitFor() == 0
-      val pu = new ProcessBuilder("git", "ls-files", "--others",
-        "--exclude-standard", "src/main", "build.sbt").start()
-      val untracked = new String(pu.getInputStream.readAllBytes()).trim
-      diffClean && pu.waitFor() == 0 && untracked.isEmpty
-    }
-  } catch { case _: Throwable => false }
-
   /** Whether the working tree is dirty over the measured code — used
     * to embed an honest `run_head` in the artifact (a dirty run's
     * numbers can't be attributed to any commit). */
@@ -368,15 +324,7 @@ object Bench {
     val (wallSeq, outSeq1) =
       try timeSuite(spark, sfDir, 1, heavy)
       finally {
-        try {
-          val sc = spark.sparkContext
-          val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-          bus.getClass.getMethods.filter(_.getName == "waitUntilEmpty")
-            .sortBy(_.getParameterCount).headOption.foreach { m =>
-              if (m.getParameterCount == 0) m.invoke(bus)
-              else m.invoke(bus, java.lang.Long.valueOf(10000L))
-            }
-        } catch { case _: Throwable => Thread.sleep(300) }
+        org.apache.spark.ListenerBusDrain(spark.sparkContext)
         spark.sparkContext.removeSparkListener(suiteJobListener)
       }
     val suiteJobsSeq = suiteJobs.get()
@@ -386,8 +334,7 @@ object Bench {
       seq2.get(r.name) match {
         case Some(r2) =>
           // min over the PASSED runs only — a failed run's wall is not
-          // a measurement of the query; gc/jit ride with the run that
-          // supplied the min so they describe the committed number
+          // a measurement of the query
           if (r.ok && r2.ok) (if (r2.sec < r.sec) r2 else r)
           else if (r2.ok) r2
           else r
@@ -409,13 +356,11 @@ object Bench {
       .sortBy { case (n, _) => heavy.indexOf(n) match {
         case -1 => Int.MaxValue; case i => i } }
       .map { case (name, fn) =>
-        val gc0 = gcMillis(); val jit0 = jitMillis()
         val t0 = System.nanoTime()
         val ok = try {
           fn(spark, sfDir).write.mode("overwrite").format("noop").save(); true
         } catch { case _: Throwable => false }
-        name -> QRun(name, (System.nanoTime() - t0) / 1e9, ok,
-          gcMillis() - gc0, jitMillis() - jit0)
+        name -> QRun(name, (System.nanoTime() - t0) / 1e9, ok)
       }.toMap
     val outSeq = outSeqMin2.map { r =>
       third.get(r.name) match {
@@ -526,496 +471,6 @@ object Bench {
       System.err.println(s"[bench] vector bench FAILED: ${e.getMessage}"); ""
     }
 
-    // Planted-skew A/B: the salting win as WALL-CLOCK, not just the
-    // partition-distribution assert RelationalSpec pins (r9 judge
-    // item #2). Key 0 carries half of 20 M rows; under a plain
-    // shuffle join those all land in one partition — the straggler
-    // task that bounds stage wall at scale — while skewJoin spreads
-    // them across 8 salt buckets. Broadcast is disabled (at scale
-    // both sides exceed the budget — that case is exactly what
-    // salting is FOR; the driver-fit dim case is the scan-fused
-    // probe family, A/B'd in dense_lookup_ab below) and AQE
-    // is off: AQE's skew-split is the first line of defense, salting
-    // the explicit second for plans AQE can't re-split. Second of two
-    // runs reported (first warms codegen for both shapes). The A/B
-    // waits for the suite's load wake to decay first: measured right
-    // after the concurrent passes (loadavg ~18) the straggler signal
-    // drowns in scheduler contention — the r10 sf0.1 point read 1.03×
-    // where a calm box reads ~1.8× for the identical corpus.
-    val skew = if (!blockOn("skew_join_planted")) "" else try {
-      import org.apache.spark.sql.functions._
-      awaitCalm(maxLoad = 2.0, budgetSec = 240)
-      val prevB = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-      val prevA = spark.conf.get("spark.sql.adaptive.enabled")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      try {
-        val n = 20000000L
-        val big = spark.range(n).select(
-          when(col("id") % 2 === 0, 0L).otherwise(col("id") % 1000 + 1).as("k"),
-          col("id").cast("double").as("v"))
-        val small = spark.range(1001).select(col("id").as("k"),
-          concat(lit("t"), col("id")).as("tag"))
-        def timed(df: => org.apache.spark.sql.DataFrame): Double = {
-          val t0 = System.nanoTime()
-          df.groupBy("tag").agg(count(lit(1)), sum("v")).write
-            .mode("overwrite").format("noop").save()
-          (System.nanoTime() - t0) / 1e9
-        }
-        def plainS = timed(big.join(small, Seq("k")))
-        def saltedS = timed(graft.operators.Relational.skewJoin(
-          big, small, "k", saltFactor = 8, hotKeys = Some(Seq(0L))))
-        plainS; saltedS // warm pass, discarded
-        val (p, sl) = (plainS, saltedS)
-        s""","skew_join_planted_20m_hotkey_half":{"plain_shuffle_sec":${"%.3f".format(p)},"salted_sec":${"%.3f".format(sl)},"speedup":${"%.2f".format(p / sl)}}"""
-      } finally {
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevB)
-        spark.conf.set("spark.sql.adaptive.enabled", prevA)
-      }
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] skew bench FAILED: ${e.getMessage}"); ""
-    }
-
-    // Aggregate-pushdown A/B for the time-proximity join (round-10
-    // item #7: the 6.8× win lived only in a commit message — now the
-    // artifact carries it at every bench point): the ENUMERATING plan
-    // (proximity join → count) vs the COUNTING plan (proximityCount)
-    // on the same purchases×errors corpus the suite's range_join uses.
-    // Second of two runs reported (first warms codegen for both).
-    val pcAb = if (!blockOn("proximity_count_ab")) "" else try {
-      import org.apache.spark.sql.functions._
-      awaitCalm(maxLoad = 2.0, budgetSec = 240)
-      val ev = Tables.load(spark, sfDir, "events")
-      def purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("event_id").as("p_id"), col("ts").as("p_ts"))
-      def errors = ev.filter(col("event_type") === "error")
-        .select(col("ts").as("e_ts"))
-      def timed(df: => org.apache.spark.sql.DataFrame): Double = {
-        val t0 = System.nanoTime()
-        df.write.mode("overwrite").format("noop").save()
-        (System.nanoTime() - t0) / 1e9
-      }
-      def enumS = timed(graft.operators.TemporalJoin
-        .proximity(purchases,
-          ev.filter(col("event_type") === "error")
-            .select(col("event_id").as("e_id"), col("ts").as("e_ts")),
-          "p_ts", "e_ts", tolSec = 300L)
-        .groupBy(to_date(col("p_ts")).as("day"))
-        .agg(count(lit(1)).as("n_pairs"),
-          count_distinct(col("p_id")).as("n_purchases")))
-      def countS = timed(graft.operators.TemporalJoin
-        .proximityCount(purchases, errors, "p_ts", "e_ts", tolSec = 300L)
-        .filter(col("n_matches") > 0)
-        .groupBy(to_date(col("p_ts")).as("day"))
-        .agg(sum("n_matches").as("n_pairs"),
-          count(col("p_id")).as("n_purchases")))
-      enumS; countS // warm pass, discarded
-      val (e, c) = (enumS, countS)
-      s""","proximity_count_ab":{"enumerate_then_count_sec":${"%.3f".format(e)},"count_pushdown_sec":${"%.3f".format(c)},"speedup":${"%.2f".format(e / c)}}"""
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] proximity-count A/B FAILED: ${e.getMessage}"); ""
-    }
-
-    // Scan-throughput floor (round-12 judge item #6): q3_shipping's
-    // profile says "fact-scan-job-dominated" and a6/date_parts say
-    // "parquet-decode-bound" — one number makes those claims
-    // commensurable across queries AND engines: the wall of a bare
-    // 2-column aggregate scan over the same files, here and (via
-    // bench_oracle.py's scan_floor block) in DuckDB. Queries whose
-    // plan is already minimal carry this as their attribution: their
-    // residual vs DuckDB is the vectorized-parquet-decode gap, not a
-    // plan defect. Min-of-3 after one warm pass.
-    var sparkScanWalls = Map.empty[String, Double]
-    val scanFloor = if (!blockOn("scan_floor")) "" else try {
-      import org.apache.spark.sql.functions._
-      awaitCalm(maxLoad = 2.0, budgetSec = 240)
-      def dirMb(tab: String): Double = {
-        val p = Paths.get(sfDir, s"$tab.parquet")
-        val f = p.toFile
-        val bytes = if (f.isDirectory) f.listFiles().map(_.length()).sum else f.length()
-        bytes / 1e6
-      }
-      def timed3(mk: => org.apache.spark.sql.DataFrame): Double = {
-        def once = {
-          val t0 = System.nanoTime()
-          mk.write.mode("overwrite").format("noop").save()
-          (System.nanoTime() - t0) / 1e9
-        }
-        once // warm
-        (1 to 3).map(_ => once).min
-      }
-      def block(tab: String, mk: => org.apache.spark.sql.DataFrame,
-                colsRead: Int): String = {
-        val rows = Tables.load(spark, sfDir, tab).count()
-        val w = timed3(mk)
-        sparkScanWalls += tab -> w
-        val mb = dirMb(tab)
-        s""""$tab":{"file_mb":${"%.1f".format(mb)},"rows":$rows,"cols_read":$colsRead,"wall_s":${"%.3f".format(w)},"mrows_per_s":${"%.1f".format(rows / w / 1e6)},"mb_per_s":${"%.0f".format(mb / w)}}"""
-      }
-      val li = block("lineitem",
-        Tables.load(spark, sfDir, "lineitem")
-          .agg(sum("l_extendedprice"), avg("l_quantity"), count(lit(1))), 2)
-      val ev = block("events",
-        Tables.load(spark, sfDir, "events")
-          .agg(count(col("ts")), sum("value")), 2)
-      s""","scan_floor":{$li,$ev}"""
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] scan-floor FAILED: ${e.getMessage}"); ""
-    }
-
-    // denseLookupJoin A/B (round-12 judge item #5): salted_join's old
-    // broadcast-hash-join plan — whose x100 attribution was 0.80 s
-    // serial HashedRelation build + 0.26 s transmit of 254 MB — vs the
-    // scan-fused dict-coded byte-array lookup that replaced it. Both
-    // shapes share the warm scan cache; min-of-2 after a warm pass.
-    val dljAb = if (!blockOn("dense_lookup_ab")) "" else try {
-      import org.apache.spark.sql.functions._
-      awaitCalm(maxLoad = 2.0, budgetSec = 240)
-      def big = Tables.load(spark, sfDir, "lineitem")
-        .select("l_orderkey", "l_extendedprice")
-      def small = Tables.load(spark, sfDir, "orders")
-        .filter(col("o_orderpriority") === "1-URGENT")
-        .select(col("o_orderkey"), col("o_orderpriority"))
-      def aggTail(df: org.apache.spark.sql.DataFrame) = df
-        .groupBy("o_orderpriority")
-        .agg(count(lit(1)).as("n"), round(sum("l_extendedprice"), 2).as("revenue"))
-        .orderBy("o_orderpriority")
-      def oldPlan = aggTail(big.join(broadcast(small),
-        big("l_orderkey") === small("o_orderkey")).drop("o_orderkey"))
-      def newPlan = aggTail(graft.operators.Relational.denseLookupJoin(
-        big, small, "l_orderkey", "o_orderkey", "o_orderpriority"))
-      def timed(mk: => org.apache.spark.sql.DataFrame): Double = {
-        val t0 = System.nanoTime()
-        mk.write.mode("overwrite").format("noop").save()
-        (System.nanoTime() - t0) / 1e9
-      }
-      timed(oldPlan); timed(newPlan) // warm pass, discarded
-      val o = (1 to 2).map(_ => timed(oldPlan)).min
-      val n = (1 to 2).map(_ => timed(newPlan)).min
-      // disclose which plan the "new" side actually took at THIS scale:
-      // past maxCodesBytes (the x1000 point's 150 M-key orders span)
-      // denseLookupJoin legitimately falls back to the broadcast join,
-      // and the A/B then measures fallback-vs-broadcast (~1.0x), not a
-      // silent win
-      val newPath = {
-        val ps = newPlan.queryExecution.executedPlan.toString
-        if (ps.contains("dense_lookup")) "dense_lookup"
-        // r16: the out-of-contract fallback is budgeted — above
-        // maxFallbackBroadcastBytes it is a SHUFFLE_HASH join, not a
-        // driver-mediated broadcast (r15 judge item #2)
-        else if (ps.contains("ShuffledHashJoin")) "shuffle_hash_fallback"
-        else "broadcast_join_fallback"
-      }
-      s""","dense_lookup_ab":{"broadcast_hash_join_sec":${"%.3f".format(o)},"dense_lookup_sec":${"%.3f".format(n)},"speedup":${"%.2f".format(o / n)},"new_plan_path":"$newPath"}"""
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] dense-lookup A/B FAILED: ${e.getMessage}"); ""
-    }
-
-    // Events timestamp-decode A/B (r13 judge item #2): four weak
-    // entries (date_functions, a8_interpolate, asof_join, date_parts)
-    // shared an "events decode floor" story quantified only as a
-    // ratio. This decomposes it inside the artifact: a no-file range
-    // job prices Spark's fixed job cost, a zero-column count prices
-    // the scan machinery (row-group metadata + task round-trips), and
-    // the plain-INT64 vs TIMESTAMP column reads price the decode
-    // itself, with the datetimeRebaseModeInRead=CORRECTED variant
-    // pricing the per-value julian-cutoff check the default EXCEPTION
-    // mode runs on non-Spark-written files. r14 idle-box result at
-    // x100: the ts read adds ~0.02 s over the zero-column floor and
-    // CORRECTED is within noise — a NEGATIVE A/B. The events-family
-    // ratio vs DuckDB is fixed job+scan cost on a small file (DuckDB's
-    // fixed cost is ~1 ms), not a decode defect; the scale sweep shows
-    // exactly this cost amortizing away (suite ratio 1.14→0.44→0.04).
-    val tsDecodeAb = if (!blockOn("ts_decode_ab")) "" else try {
-      import org.apache.spark.sql.functions._
-      awaitCalm(maxLoad = 2.0, budgetSec = 240)
-      def timed3(mk: => org.apache.spark.sql.DataFrame): Double = {
-        def once = {
-          val t0 = System.nanoTime()
-          mk.write.mode("overwrite").format("noop").save()
-          (System.nanoTime() - t0) / 1e9
-        }
-        once // warm
-        (1 to 3).map(_ => once).min
-      }
-      def ev = spark.read.parquet(s"$sfDir/events.parquet")
-      val jobFloor = timed3(spark.range(10000000L).agg(sum("id")))
-      val zeroCol = timed3(ev.agg(count(lit(1))))
-      val plainInt = timed3(ev.agg(count(col("event_id")), sum(col("value"))))
-      val tsDefault = timed3(ev.agg(count(col("ts")), sum(col("value"))))
-      val modeKey = "spark.sql.parquet.datetimeRebaseModeInRead"
-      val prevMode = spark.conf.getOption(modeKey)
-      val tsCorrected = try {
-        spark.conf.set(modeKey, "CORRECTED")
-        timed3(ev.agg(count(col("ts")), sum(col("value"))))
-      } finally prevMode match {
-        case Some(m) => spark.conf.set(modeKey, m)
-        case None => spark.conf.unset(modeKey)
-      }
-      s""","ts_decode_ab":{"job_floor_range10m_s":${"%.3f".format(jobFloor)},"events_zero_col_scan_s":${"%.3f".format(zeroCol)},"events_int64_plus_double_s":${"%.3f".format(plainInt)},"events_ts_plus_double_s":${"%.3f".format(tsDefault)},"events_ts_rebase_corrected_s":${"%.3f".format(tsCorrected)},"verdict":"ts decode adds ${"%.3f".format(math.max(0, tsDefault - plainInt))} s over the int64 read; rebase CORRECTED delta ${"%.3f".format(tsDefault - tsCorrected)} s — events-family ratios are fixed job+scan cost, not decode"}"""
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] ts-decode A/B FAILED: ${e.getMessage}"); ""
-    }
-
-    // Dedup/packing stage floors (r17 judge item #2): the three
-    // real-work weak entries at x1000 (simhash_neardups 4.1×,
-    // minhash_bands 3.4×, pack_sequences 5.4×) carried material wall
-    // with no in-artifact decomposition. Each is cut at its natural
-    // stage boundaries — sketch/tokenize-only scan, + the first
-    // shuffle (groups / bands-distinct / window), full committed
-    // query — so the dominant stage is named by measurement, not
-    // guess. Min-of-3 after one warm pass, same instrument as the
-    // other floor blocks.
-    val dedupStage = if (!blockOn("dedup_stage_floor")) "" else try {
-      import org.apache.spark.sql.functions._
-      awaitCalm(maxLoad = 2.0, budgetSec = 240)
-      def timed3(mk: => org.apache.spark.sql.DataFrame): Double = {
-        def once = {
-          val t0 = System.nanoTime()
-          mk.write.mode("overwrite").format("noop").save()
-          (System.nanoTime() - t0) / 1e9
-        }
-        once // warm
-        (1 to 3).map(_ => once).min
-      }
-      def docs = Tables.loadParallel(spark, sfDir, "documents")
-      // pack_sequences: scan+token-count (no window) vs committed
-      val packScan = timed3(docs.select(col("doc_id"),
-          pmod(col("doc_id"), lit(8)).as("shard"),
-          (graft.plans.StringCount.countChar(col("text"), ' ') + 1).as("toks"))
-        .agg(count(lit(1)), bit_xor(col("toks"))))
-      val packFull = timed3(SparkEntry.queries("pack_sequences")(spark, sfDir))
-      // simhash: sketch-only scan, + distinct-sketch groups, committed
-      val simSketch = timed3(docs.select(
-          graft.operators.Dedup.simhash(col("text")).as("sk"))
-        .agg(count(lit(1)), bit_xor(col("sk"))))
-      val simGroups = timed3(docs.select(col("doc_id").as("id"),
-          graft.operators.Dedup.simhash(col("text")).as("sk"))
-        .groupBy("sk").agg(min("id"), count(lit(1)))
-        .agg(count(lit(1))))
-      val simFull = timed3(SparkEntry.queries("simhash_neardups")(spark, sfDir))
-      // minhash_bands: bands-UDF explode (no distinct agg) vs committed
-      val mbUdf = graft.operators.Dedup.lshBandBucketsUdf(3, 16, 4)
-      val mbSketch = timed3(docs
-        .select(explode(mbUdf(col("text"))).as("b"))
-        .agg(count(lit(1)), bit_xor(col("b._2"))))
-      val mbFull = timed3(SparkEntry.queries("minhash_bands")(spark, sfDir))
-      def pct(stage: Double, full: Double): String =
-        "%.0f".format(100.0 * math.min(stage, full) / math.max(full, 1e-9))
-      s""","dedup_stage_floor":{"pack_scan_tokencount_s":${"%.3f".format(packScan)},"pack_full_s":${"%.3f".format(packFull)},"simhash_sketch_scan_s":${"%.3f".format(simSketch)},"simhash_plus_groups_s":${"%.3f".format(simGroups)},"simhash_full_s":${"%.3f".format(simFull)},"minhash_bands_udf_scan_s":${"%.3f".format(mbSketch)},"minhash_bands_full_s":${"%.3f".format(mbFull)},"verdict":"sketch/tokenize scan share: pack ${pct(packScan, packFull)}%, simhash ${pct(simSketch, simFull)}%, minhash ${pct(mbSketch, mbFull)}% — pack residual is exchange+WindowExec, sketch residuals are shuffle/join work"}"""
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] dedup stage floor FAILED: ${e.getMessage}"); ""
-    }
-
-    // a6_pricing_summary floor probe (r14 judge item #3): the entry's
-    // "scan-bound" story was asserted, never priced — scan_floor reads
-    // 2 columns, a6 reads 7. Three walls over the SAME filtered file:
-    // the 5 aggregated columns ungrouped, the full 7-column set
-    // ungrouped (group cols read but not grouped), and the committed
-    // 6-group query. grouped − bare7 prices the HashAggregate itself;
-    // bare7 − bare5 prices decoding the two group strings. The DuckDB
-    // side of the same bare-7 scan is in scan_floor ("lineitem7", via
-    // bench_oracle.py), so the cross-engine gap is attributable to
-    // scan vs agg inside one artifact. Min-of-3 after one warm pass.
-    val a6Floor = if (!blockOn("a6_floor_ab")) "" else try {
-      import org.apache.spark.sql.functions._
-      awaitCalm(maxLoad = 2.0, budgetSec = 240)
-      def timed3(mk: => org.apache.spark.sql.DataFrame): Double = {
-        def once = {
-          val t0 = System.nanoTime()
-          mk.write.mode("overwrite").format("noop").save()
-          (System.nanoTime() - t0) / 1e9
-        }
-        once // warm
-        (1 to 3).map(_ => once).min
-      }
-      def li = Tables.load(spark, sfDir, "lineitem")
-        .filter(col("l_shipdate") <= lit("2000-12-01").cast("date"))
-      val aggCols = Seq(sum("l_quantity"), sum("l_extendedprice"),
-        sum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))),
-        count(lit(1)))
-      val bare5 = timed3(li.agg(aggCols.head, aggCols.tail: _*))
-      val with7 = aggCols ++ Seq(count(col("l_returnflag")),
-        count(col("l_linestatus")))
-      val bare7 = timed3(li.agg(with7.head, with7.tail: _*))
-      val grouped = timed3(SparkEntry.queries("a6_pricing_summary")(spark, sfDir))
-      // r17: the "dictionary-code the group columns" candidate fix,
-      // measured in-artifact. Packing the two 1-char strings into one
-      // int key (ascii*256+ascii) measured ~1.2x SLOWER than the
-      // committed string keys at sf0.1 (ProfileAdhoc: 0.417 vs 0.346
-      // min-of-5) — the string-key 6-group HashAggregate already takes
-      // the generated fast-hash-map path, and the packing adds two
-      // per-row ascii() calls for nothing. Kept here so the rejected
-      // alternative stays priced at every point.
-      val groupedInt = timed3 {
-        li.groupBy((ascii(col("l_returnflag")) * 256 +
-            ascii(col("l_linestatus"))).as("_code"))
-          .agg(sum("l_quantity"), sum("l_extendedprice"),
-            sum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))),
-            avg("l_quantity"), avg("l_extendedprice"), count(lit(1)))
-      }
-      s""","a6_floor_ab":{"bare_5col_scan_s":${"%.3f".format(bare5)},"bare_7col_scan_s":${"%.3f".format(bare7)},"grouped_a6_s":${"%.3f".format(grouped)},"grouped_packed_intkey_s":${"%.3f".format(groupedInt)},"group_agg_overhead_s":${"%.3f".format(grouped - bare7)},"group_col_decode_s":${"%.3f".format(bare7 - bare5)},"verdict":"a6 adds ${"%.3f".format(grouped - bare7)} s over its own bare 7-col scan — ${if (grouped - bare7 <= 0.2 * grouped) "floor-certified: the 6-group HashAggregate runs at scan speed; the DuckDB gap is the lineitem7 scan_floor ratio" else "the grouped agg adds materially over the scan — plan headroom remains"}; packed-int-key alternative ${if (groupedInt < grouped) "faster — revisit" else "not faster (rejected r17 A/B)"}"}"""
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] a6 floor A/B FAILED: ${e.getMessage}"); ""
-    }
-
-    // q3 per-stage floor (r14 judge item #4): accounts for the
-    // residual between q3's wall and DuckDB's — four cumulative
-    // shapes over the same files, min-of-3 each, so every increment
-    // (bitmap probe, keyed agg+top10, attach+builds) is a named delta
-    // over the previous one, anchored at the bare 4-column filtered
-    // scan that is the plan's physical floor.
-    val q3Floor = if (!blockOn("q3_stage_floor")) "" else try {
-      import org.apache.spark.sql.functions._
-      awaitCalm(maxLoad = 2.0, budgetSec = 240)
-      def timed3(mk: => org.apache.spark.sql.DataFrame): Double = {
-        def once = {
-          val t0 = System.nanoTime()
-          mk.write.mode("overwrite").format("noop").save()
-          (System.nanoTime() - t0) / 1e9
-        }
-        once // warm
-        (1 to 3).map(_ => once).min
-      }
-      val cut = lit("1995-03-15").cast("date")
-      def l = Tables.load(spark, sfDir, "lineitem")
-        .filter(col("l_shipdate") > cut)
-      def o = Tables.load(spark, sfDir, "orders")
-        .filter(col("o_orderdate") < cut)
-      def c = Tables.load(spark, sfDir, "customer")
-        .filter(col("c_mktsegment") === "BUILDING")
-      // r19 honesty fix (r18 judge read "eager per-run builds" off this
-      // block's note): the committed q3 memoizes both probe structures
-      // (reuse = true since r15), so the floor's stages now probe the
-      // SAME way — the builds are priced SEPARATELY below as the
-      // one-time cold cost, not smeared into every delta.
-      def ocKeys = graft.operators.Relational
-        .bitmapSemiJoin(o, c, "o_custkey", "c_custkey", reuse = true)
-        .select(col("o_orderkey"))
-      def probed = graft.operators.Relational
-        .bitmapSemiJoin(l, ocKeys, "l_orderkey", "o_orderkey", reuse = true)
-      val sums = Seq(sum("l_extendedprice"), sum("l_discount"), count(lit(1)))
-      // cold build cost: construct both probes WITHOUT the cache once
-      val buildCold = {
-        val t0 = System.nanoTime()
-        graft.operators.Relational
-          .bitmapSemiJoin(l,
-            graft.operators.Relational
-              .bitmapSemiJoin(o, c, "o_custkey", "c_custkey")
-              .select(col("o_orderkey")),
-            "l_orderkey", "o_orderkey")
-          .queryExecution.executedPlan // force both eager builds
-        (System.nanoTime() - t0) / 1e9
-      }
-      val bareScan = timed3(l.agg(sums.head, sums.tail: _*))
-      val plusProbe = timed3(probed.agg(sums.head, sums.tail: _*))
-      val plusAgg = timed3(probed.groupBy(col("l_orderkey"))
-        .agg(round(sum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))), 2)
-          .as("revenue"))
-        .orderBy(desc("revenue"), col("l_orderkey")).limit(10))
-      val full = timed3(SparkEntry.queries("q3_shipping")(spark, sfDir))
-      s""","q3_stage_floor":{"bare_4col_filtered_scan_s":${"%.3f".format(bareScan)},"plus_bitmap_probe_s":${"%.3f".format(plusProbe)},"plus_keyed_agg_top10_s":${"%.3f".format(plusAgg)},"full_q3_s":${"%.3f".format(full)},"eager_build_cold_s":${"%.3f".format(buildCold)},"delta_probe_s":${"%.3f".format(plusProbe - bareScan)},"delta_agg_s":${"%.3f".format(plusAgg - plusProbe)},"delta_attach_s":${"%.3f".format(full - plusAgg)},"note":"probe/agg stages use the SAME memoized probes as the committed query (reuse=true); eager_build_cold_s prices the one-time cache-miss build pair separately; the bare scan is the plan's physical floor — the residual vs DuckDB decomposes into these deltas"}"""
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] q3 stage floor FAILED: ${e.getMessage}"); ""
-    }
-
-    // asof_join stage floor (r15 judge item #4: back on the weak set
-    // at 3.3× isolated with the tail block saying "not explained").
-    // r16 rebuilt the query on TemporalJoin.asofFused — ONE events
-    // scan instead of two plus a pre-agg shuffle — so the floor story
-    // changes shape: three cumulative walls over the same file, the
-    // bare 4-column filtered scan (the exact pushdown the fused form
-    // installs), scan + key window + payload projection (no final
-    // sort), and the committed query. Every residual vs DuckDB is a
-    // named delta; the bare scan is the physical floor.
-    val asofFloor = if (!blockOn("asof_floor")) "" else try {
-      import org.apache.spark.sql.functions._
-      awaitCalm(maxLoad = 2.0, budgetSec = 120)
-      def timed3(mk: => org.apache.spark.sql.DataFrame): Double = {
-        def once = {
-          val t0 = System.nanoTime()
-          mk.write.mode("overwrite").format("noop").save()
-          (System.nanoTime() - t0) / 1e9
-        }
-        once // warm
-        (1 to 3).map(_ => once).min
-      }
-      def ev = Tables.load(spark, sfDir, "events")
-        .filter(col("user_id") < 4 &&
-          col("event_type").isin("purchase", "click"))
-      def fused = graft.operators.TemporalJoin.asofFused(ev,
-        isLeft = col("event_type") === "purchase",
-        isRight = col("event_type") === "click",
-        keys = Seq("user_id"), ts = col("ts"),
-        lPayload = Seq("event_id" -> col("event_id"), "ts" -> col("ts")),
-        rPayload = Seq("click_id" -> col("event_id"), "c_ts" -> col("ts")),
-        rTieBreak = Seq(col("event_id")))
-      val bare = timed3(ev.agg(count(lit(1)), max("event_id"),
-        max("user_id"), max("ts")))
-      val window = timed3(fused.select(col("event_id"), col("user_id"),
-        col("click_id"),
-        expr("(unix_micros(ts) - unix_micros(c_ts)) div 1000000").as("lag_s")))
-      val full = timed3(SparkEntry.queries("asof_join")(spark, sfDir))
-      s""","asof_floor":{"bare_4col_filtered_scan_s":${"%.3f".format(bare)},"plus_key_window_s":${"%.3f".format(window)},"full_asof_join_s":${"%.3f".format(full)},"delta_window_s":${"%.3f".format(window - bare)},"delta_final_sort_s":${"%.3f".format(full - window)},"note":"r16 fused single-scan form (TemporalJoin.asofFused) — the r14 two-table form paid this scan twice plus a pre-agg shuffle; the bare scan reads the same 4 columns with the same pushed filter"}"""
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] asof floor FAILED: ${e.getMessage}"); ""
-    }
-
-    // a8 fixed-cost certificate (r14 judge item #5): the r15 spine
-    // fusion removed the bounds-agg and spine-join jobs (4 -> 3 at
-    // x100, and one of the three is AQE materializing the final
-    // stage). The block counts the jobs of one committed a8 execution
-    // and prices them against the same no-file job floor ts_decode_ab
-    // uses, so the remaining fixed cost is a named number, not an
-    // asserted story.
-    val a8Fixed = if (!blockOn("a8_fixed_cost")) "" else try {
-      import org.apache.spark.sql.functions._
-      awaitCalm(maxLoad = 2.0, budgetSec = 120)
-      def timed3(mk: => org.apache.spark.sql.DataFrame): Double = {
-        def once = {
-          val t0 = System.nanoTime()
-          mk.write.mode("overwrite").format("noop").save()
-          (System.nanoTime() - t0) / 1e9
-        }
-        once
-        (1 to 3).map(_ => once).min
-      }
-      val jobFloor = timed3(spark.range(10000000L).agg(sum("id")))
-      val jobs = new java.util.concurrent.atomic.AtomicInteger()
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          jobs.incrementAndGet()
-      }
-      // the bus is private[spark]; package-private is public at the
-      // JVM level, so reflection drains it deterministically
-      def drainBus(): Unit = try {
-        val sc = spark.sparkContext
-        val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-        bus.getClass.getMethods.filter(_.getName == "waitUntilEmpty")
-          .sortBy(_.getParameterCount).headOption.foreach { m =>
-            if (m.getParameterCount == 0) m.invoke(bus)
-            else m.invoke(bus, java.lang.Long.valueOf(10000L))
-          }
-      } catch { case _: Throwable => Thread.sleep(300) }
-      val wall = {
-        spark.sparkContext.addSparkListener(listener)
-        try {
-          val w = timed3(SparkEntry.queries("a8_interpolate")(spark, sfDir))
-          drainBus()
-          jobs.set(0)
-          SparkEntry.queries("a8_interpolate")(spark, sfDir)
-            .write.mode("overwrite").format("noop").save()
-          drainBus()
-          w
-        } finally spark.sparkContext.removeSparkListener(listener)
-      }
-      val n = jobs.get()
-      s""","a8_fixed_cost":{"jobs":$n,"job_floor_s":${"%.3f".format(jobFloor)},"priced_fixed_s":${"%.3f".format(n * jobFloor)},"wall_s":${"%.3f".format(wall)},"note":"r15 spine fusion: lead+explode replaces bounds-agg + spine-join (4 jobs -> $n); the priced fixed cost is jobs x the no-file job floor"}"""
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] a8 fixed-cost FAILED: ${e.getMessage}"); ""
-    }
-
     // Suite-level fixed-cost pricing (r16 judge item #4): the warm seq
     // pass's total job count × the no-file job floor is the suite's
     // scheduler/JVM fixed cost. A uniform round-over-round drift with
@@ -1062,43 +517,6 @@ object Bench {
       s""","suite_fixed_cost":{"jobs_seq_pass":$suiteJobsSeq,"jobs_timed":${durs.length},"job_floor_nofile_s":${"%.4f".format(floorNoFile)},"job_floor_inwindow_s":${floorInWindow.map(f => "%.4f".format(f)).getOrElse("null")},"job_floor_s":${"%.4f".format(jobFloor)},"priced_fixed_s":${"%.3f".format(priced)},"wall_seq_warm_s":${"%.3f".format(wallSeq)},"fixed_share_raw":${"%.2f".format(rawShare)},"fixed_share_of_wall":${"%.2f".format(share)},"floor_suspect":$floorSuspect,"note":"jobs counted+timed across the committed warm PAR=1 pass; floor = min(post-suite min-of-3 no-file job, 5th-smallest in-window job); priced = sum over jobs of min(dur, floor), clamped share"}"""
     } catch { case e: Throwable =>
       System.err.println(s"[bench] suite fixed-cost FAILED: ${e.getMessage}"); ""
-    }
-
-    // Probe-path disclosure (r14 judge item #1 supporting evidence):
-    // which scan-fused-probe (or fallback) plan each probe-family
-    // query actually took AT THIS SCALE. At sf0.1..x100 all four are
-    // dense/bitmap; at x1000 the 150 M-key orders span exceeds
-    // denseLookupJoin's maxCodesBytes (96 MB of codes) so
-    // salted_join/j1-class dims legitimately fall back to the
-    // broadcast hash join — the artifact names the path instead of a
-    // pin silently meaning something different per point.
-    val probePaths = if (!blockOn("probe_paths")) "" else try {
-      val targets = Seq("j1_equijoin", "j4_semijoin", "salted_join",
-        "q3_shipping").filterNot(excluded)
-      val per = targets.map { n =>
-        val p = SparkEntry.queries(n)(spark, sfDir)
-          .queryExecution.executedPlan.toString
-        val path =
-          if (p.contains("dense_lookup")) "dense_lookup"
-          else if (p.contains("bitmap_contains")) "bitmap_contains"
-          else if (p.contains("longset_contains")) "longset_contains"
-          else if (p.contains("bloom_might_contain")) "bloom_prefilter"
-          else if (p.contains("ShuffledHashJoin")) "shuffle_hash_fallback"
-          // r16 q3: the probes run EAGERLY at construction and the
-          // returned plan is the ten-key In-pushdown attach — that In
-          // marker, not a probe expression, is its healthy signature
-          else if (n == "q3_shipping" && (p.contains("In(o_orderkey") ||
-            p.contains("in(o_orderkey"))) "eager_probes_plus_ten_row_attach"
-          else if (p.contains("BroadcastHashJoin")) "broadcast_join_fallback"
-          else "other"
-        // q3 keeps its tiny 10-row attach BroadcastHashJoin by design;
-        // join_free reports whether the FACT side is join-free, i.e.
-        // the probe marker fired at all
-        s""""$n":{"path":"$path","has_join_operator":${p.contains("Join")}}"""
-      }
-      s""","probe_paths":{${per.mkString(",")}}"""
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] probe-path dump FAILED: ${e.getMessage}"); ""
     }
 
     // Probe-family degradation chain run FOR REAL (r14 judge item #1:
@@ -1245,10 +663,6 @@ object Bench {
     // self-adjudication: DuckDB oracle wall + ratio inside the artifact
     var duckWarmWall: Option[Double] = None
     var subsetSummary: String = ""
-    // (spark per-query, duckdb per-query, real-oracle subset names) —
-    // hoisted for the prior-round subset decomposition below
-    var subsetThis: Option[(Map[String, Double], Map[String, Double],
-      Set[String])] = None
     val duck = duckdbBaseline(sfDir) match {
       case Some(json) =>
         // ratio vs the WARM DuckDB wall — the comparison least
@@ -1283,7 +697,6 @@ object Bench {
             .findFirstMatchIn(json).map(_.group(1)).getOrElse(""))
           .map(m => m.group(1) -> m.group(2).toDouble).toMap
         val both = realNames.filter(n => sparkPer.contains(n) && duckPer.contains(n))
-        subsetThis = Some((sparkPer, duckPer, both))
         val sparkReal = both.toSeq.map(sparkPer).sum
         val duckReal = both.toSeq.map(duckPer).sum
         val subset =
@@ -1316,7 +729,6 @@ object Bench {
         // ratio > 2). Same-JVM by necessity (one bench process), but
         // post-suite + idle-gated + solo, which is what separates
         // suite-window contention from plan cost.
-        var isolatedBySec = Map.empty[String, Double]
         val isolatedBlock = if (weak.isEmpty) "" else try {
           awaitCalm(maxLoad = 2.0, budgetSec = 240)
           val per = weak.map { case (n, sp, du) =>
@@ -1328,7 +740,6 @@ object Bench {
             }
             once // warm
             val iso = (1 to 3).map(_ => once).min
-            isolatedBySec += n -> iso
             val isoRatio = iso / math.max(du, 1e-9)
             s""""$n":{"committed_s":${"%.3f".format(sp)},"isolated_s":${"%.3f".format(iso)},"duckdb_s":${"%.3f".format(du)},"isolated_ratio":${"%.1f".format(isoRatio)},"tail_s":${"%.3f".format(sp - iso)},"tail_only_conviction":${isoRatio <= 2.0}}"""
           }
@@ -1336,73 +747,7 @@ object Bench {
         } catch { case e: Throwable =>
           System.err.println(s"[bench] weak-set isolation FAILED: ${e.getMessage}"); ""
         }
-        // Suite-window TAIL ATTRIBUTION (r14 judge item #2): the tail
-        // (committed − isolated) convicted 2 of 5 weak entries at the
-        // r14 x100 point and inflated the rest, with nothing in the
-        // artifact saying WHAT it is. Two instruments:
-        //  (a) per-query GC and JIT milliseconds captured DURING the
-        //      committed min run (PAR=1, so the JVM-global deltas are
-        //      attributable) — if gc_ms ≈ tail, the tail is heap
-        //      pressure left by suite neighbors;
-        //  (b) two more full sequential passes in DIFFERENT schedules
-        //      (reverse-alphabetical and a hash shuffle): if a weak
-        //      entry's wall moves with its slot/neighborhood, the tail
-        //      is positional (page-cache/GC wake of whoever ran
-        //      before), not the query's plan. `follows_order` flags
-        //      entries whose cross-order spread covers ≥half the tail.
-        val tailBlock = if (weak.isEmpty || !blockOn("tail_attribution")) ""
-        else try {
-          awaitCalm(maxLoad = 2.0, budgetSec = 240)
-          val names = suiteQueries.keys.toSeq
-          val orderRev = names.sorted.reverse
-          val orderHash = names.sortBy(n => (n.hashCode * 2654435761L, n))
-          def slotOf(order: Seq[String], n: String): Int = {
-            val sorted = names.sortBy(m => (order.indexOf(m) match {
-              case -1 => Int.MaxValue; case i => i }, m))
-            sorted.indexOf(n)
-          }
-          val (_, outRev) = timeSuite(spark, sfDir, 1, orderRev)
-          awaitCalm(maxLoad = 2.0, budgetSec = 120)
-          val (_, outHash) = timeSuite(spark, sfDir, 1, orderHash)
-          val revBy = outRev.map(r => r.name -> r).toMap
-          val hashBy = outHash.map(r => r.name -> r).toMap
-          val committedBy = outSeq.map(r => r.name -> r).toMap
-          val per = weak.map { case (n, sp, _) =>
-            val iso = isolatedBySec.getOrElse(n, sp)
-            val tail = sp - iso
-            val c = committedBy.get(n)
-            val rv = revBy.get(n); val hs = hashBy.get(n)
-            val walls = Seq(Some(sp), rv.map(_.sec), hs.map(_.sec)).flatten
-            val spread = walls.max - walls.min
-            val followsOrder = tail > 0.05 && spread >= 0.5 * tail
-            val gcMs = c.map(_.gcMs).getOrElse(-1L)
-            val jitMs = c.map(_.jitMs).getOrElse(-1L)
-            val gcShare = if (tail > 1e-9 && gcMs >= 0) gcMs / 1e3 / tail else 0.0
-            val verdict =
-              if (tail <= 0.05) "no material tail"
-              else if (gcShare >= 0.5) "tail is GC left by suite neighbors (gc_ms covers >=50% of it)"
-              else if (followsOrder) "tail follows schedule position (neighbor wake: page cache/thread-pool wind-down), not the plan"
-              else "tail not explained by GC or schedule position at this point"
-            s""""$n":{"committed_s":${"%.3f".format(sp)},"isolated_s":${"%.3f".format(iso)},"tail_s":${"%.3f".format(tail)},"committed_gc_ms":$gcMs,"committed_jit_ms":$jitMs,"wall_reverse_order_s":${rv.map(r => "%.3f".format(r.sec)).getOrElse("null")},"wall_hash_order_s":${hs.map(r => "%.3f".format(r.sec)).getOrElse("null")},"slot_committed":${slotOf(heavy, n)},"slot_reverse":${slotOf(orderRev, n)},"slot_hash":${slotOf(orderHash, n)},"cross_order_spread_s":${"%.3f".format(spread)},"follows_order":$followsOrder,"verdict":"$verdict"}"""
-          }
-          s""","tail_attribution":{"methodology":"per-query GC/JIT deltas during the committed PAR=1 min run, plus two full sequential re-passes in reverse-alphabetical and hash-shuffled schedules","entries":${per.mkString("{", ",", "}")}}"""
-        } catch { case e: Throwable =>
-          System.err.println(s"[bench] tail attribution FAILED: ${e.getMessage}"); ""
-        }
-        // scan-floor ratio: the same bare 2-column scans timed in
-        // DuckDB by bench_oracle.py, joined here so the decode-gap
-        // claim is one number inside one artifact
-        val duckScan = "\"scan_floor\"\\s*:\\s*\\{([^}]*)\\}".r
-          .findFirstMatchIn(json).map(_.group(1)).getOrElse("")
-        val duckScanPer = "\"([a-z_]+)\"\\s*:\\s*([0-9.]+)".r
-          .findAllMatchIn(duckScan).map(m => m.group(1) -> m.group(2).toDouble).toMap
-        val scanRatio = sparkScanWalls.flatMap { case (tab, w) =>
-          duckScanPer.get(tab).map(d =>
-            s""""$tab":${"%.2f".format(w / math.max(d, 1e-9))}""")
-        }.mkString(",")
-        val scanBlock = if (scanRatio.nonEmpty)
-          s""","scan_floor_ratio_vs_duckdb":{$scanRatio}""" else ""
-        s""","duckdb_oracle":$json,"ratio_wall_par_vs_duckdb":$ratioPar,"ratio_wall_seq_vs_duckdb":$ratioSeq$subset$weakBlock$isolatedBlock$tailBlock$scanBlock"""
+        s""","duckdb_oracle":$json,"ratio_wall_par_vs_duckdb":$ratioPar,"ratio_wall_seq_vs_duckdb":$ratioSeq$subset$weakBlock$isolatedBlock"""
       case None => ""
     }
 
@@ -1447,197 +792,6 @@ object Bench {
       System.err.println(s"[bench] cluster-shape probe FAILED: ${e.getMessage}"); ""
     }
 
-    // Prior-round delta attribution (r13 judge item #7): the r13
-    // artifact regressed vs r12 (+19% seq sum) without stating a
-    // cause. When the previous committed BENCH_r*.json for the SAME
-    // scale dir is present in the working directory, this block
-    // carries the delta AND the round's structural changes next to
-    // it, so a ratio move is never unexplained in-artifact.
-    val priorCmp = try {
-      import scala.jdk.CollectionConverters._
-      val prior = Files.list(Paths.get(".")).iterator().asScala
-        .flatMap { p =>
-          "BENCH_r(\\d+)\\.json".r.findFirstMatchIn(p.getFileName.toString)
-            .map(m => (m.group(1).toInt, p))
-        }.toSeq.sortBy(-_._1).headOption
-      prior match {
-        case Some((rn, path)) =>
-          // the committed BENCH_r*.json is the round driver's wrapper:
-          // {"n":…,"sf":…,"tail":"<bench log tail, JSON-escaped>"} —
-          // parse with a real JSON parser (r14 advisory: the old
-          // string-replace unescape mishandled escaped backslashes) so
-          // the embedded artifact's keys match; a bare artifact (no
-          // "tail" field) passes through unchanged
-          val raw = Files.readString(path)
-          val txt = try {
-            val node = new com.fasterxml.jackson.databind.ObjectMapper()
-              .readTree(raw)
-            if (node.has("tail")) node.get("tail").asText() else raw
-          } catch { case _: Throwable => raw }
-          def num(k: String): Option[Double] =
-            (s""""$k"\\s*:\\s*([0-9.]+)""").r.findFirstMatchIn(txt)
-              .map(_.group(1).toDouble)
-          val priorSf = "\"sf\"\\s*:\\s*\"([^\"]+)\"".r
-            .findFirstMatchIn(txt).map(_.group(1))
-          // compare only when the prior artifact measured the same
-          // scale dir (the per-round driver runs at sf0.1; the scale
-          // sweep's x10/x100 points have no committed prior)
-          if (!priorSf.contains(sfDir)) "" else {
-            val pSeq = num("wall_seq_warm_sec")
-            val pDuck = num("duckdb_wall_warm_sec")
-            // per-round constant: update alongside the round's plan
-            // changes (r17 advisory: this string still described r16
-            // while r17 had changed measured plans, so a delta would
-            // have been attributed to the wrong round's changes)
-            val changes = "r18: events day-grain queries compute day " +
-              "in int64 micros math (utcDay) and parquet NTZ " +
-              "inference is off (both casts removed per row), " +
-              "sessionize rewritten session_window->lag/cumsum, " +
-              "heavy_hitters feeds Misra-Gries from a codegen " +
-              "pre-count, mm_frames uses arithmetic frameStats (no " +
-              "slice materialization), p6 uses in-place case-folding " +
-              "contains (no lowered copy), a6 derives avgs from " +
-              "shared sum/count (8->4 agg buffers)"
-            // ALSO compare against the same-HEAD sweep point (r14
-            // judge item #6): BENCH_r14 said +7.8% vs r13 while the
-            // same-HEAD BENCH_SCALE sf0.1 point said −18.5% — a 32%
-            // same-code spread with contradictory signs that no
-            // artifact caught. When BENCH_SCALE.json is present and
-            // carries a point for this sfDir, both deltas ride
-            // together with an explicit sign-agreement flag.
-            val sweepSeq: Option[(Double, Option[String])] = try {
-              val sp = Paths.get("BENCH_SCALE.json")
-              if (!Files.exists(sp)) None else {
-                val node = new com.fasterxml.jackson.databind.ObjectMapper()
-                  .readTree(Files.readString(sp))
-                import scala.jdk.CollectionConverters._
-                // the sweep artifact's git HEAD (r16 judge: the
-                // "same-HEAD" cross-check silently compared this
-                // round's run against LAST round's sweep because
-                // nothing recorded which code the sweep measured)
-                val swHead = Option(node.get("head")).map(_.asText())
-                  .filter(_.nonEmpty)
-                // exact-prefix match (r15 advisory): every sweep label
-                // ('10x sf0.1 …', '100x sf0.1 …') CONTAINS "sf0.1" —
-                // the driver-scale point is the one whose label STARTS
-                // with it, not whichever happens to be first in the
-                // points array
-                node.get("points").elements().asScala
-                  .find(p => p.has("label") && sfDir.contains("sf0.1") && {
-                    val l = p.get("label").asText()
-                    l == "sf0.1" || l.startsWith("sf0.1 ") ||
-                      l.startsWith("sf0.1(")
-                  })
-                  .flatMap(p => Option(p.get("spark_wall_seq_warm_sec"))
-                    .map(_.asDouble()))
-                  .map(v => (v, swHead))
-              }
-            } catch { case _: Throwable => None }
-            // Real-oracle-subset decomposition (r15 judge item #5): the
-            // subset ratio regressed 1.98× → 2.3-2.4× with a changed
-            // composition and a faster DuckDB wall, and nothing
-            // decomposed it. Per-query: prior vs this spark seconds
-            // AND duckdb seconds for every subset member present in
-            // both rounds, plus the composition delta (members only in
-            // one round), so engine drift separates from composition
-            // and from oracle-side speedups.
-            // Prior FULL per-query maps: the committed BENCH_r{N}.json
-            // is the driver's bounded tail-window wrapper — it carries
-            // only the compact top-15 line and no per-query duckdb
-            // map, which is why the r16 decomposition silently emitted
-            // nothing (readTree over the raw log tail threw, and the
-            // error went to stderr instead of the artifact). The full
-            // maps live in committed bench_history/BENCH_FULL_r{N}
-            // .json; every sf0.1 run also refreshes
-            // bench_history/BENCH_FULL_latest.json. Failures now land
-            // IN the artifact as subset_decomposition_error.
-            def jesc(s: String): String =
-              s.replaceAll("[\"\\\\\\n\\r\\t]", " ").take(300)
-            val subsetCmp: String = subsetThis.map { case (sparkPer, duckPer, both) =>
-              try {
-                import scala.jdk.CollectionConverters._
-                // the decomposition prior is pinned to the SAME round
-                // as prior_round_comparison (r17 advisory: the two
-                // blocks selected priors independently — max
-                // BENCH_r{N}.json in cwd vs max bench_history file —
-                // so out-of-sync sets produced one comparison object
-                // whose deltas came from different rounds, and a
-                // rerun at a committed round decomposed against its
-                // own artifact, vacuously)
-                val histDir = Paths.get("bench_history")
-                val prior = Some(histDir.resolve(s"BENCH_FULL_r$rn.json"))
-                  .filter(Files.exists(_)).map(p => (rn, p))
-                prior match {
-                  case None =>
-                    s""","subset_decomposition_error":"bench_history/BENCH_FULL_r$rn.json missing — the decomposition prior must be the SAME round as prior_round_comparison (BENCH_r$rn.json); commit the full artifact under that name""""
-                  case Some((prn, fullPath)) =>
-                    val node = new com.fasterxml.jackson.databind.ObjectMapper()
-                      .readTree(Files.readString(fullPath))
-                    def qmap(n: com.fasterxml.jackson.databind.JsonNode)
-                      : Map[String, Double] =
-                      n.properties().asScala
-                        .filter(_.getValue.isNumber)
-                        .map(e => e.getKey -> e.getValue.asDouble()).toMap
-                    val pSpark = Option(node.get("queries")).map(qmap)
-                      .getOrElse(Map.empty[String, Double])
-                    val pDuckQ = Option(node.get("duckdb_oracle"))
-                      .flatMap(d => Option(d.get("queries"))).map(qmap)
-                      .getOrElse(Map.empty[String, Double])
-                    val pRatio = Option(node.get("real_oracle_subset"))
-                      .flatMap(r => Option(r.get("ratio"))).map(_.asDouble())
-                    if (pSpark.size < 20 || pDuckQ.size < 20)
-                      s""","subset_decomposition_error":"bench_history/BENCH_FULL_r$prn.json has truncated maps (spark n=${pSpark.size}, duckdb n=${pDuckQ.size}) — need the full artifact""""
-                    else {
-                      val common = both.filter(n =>
-                        pSpark.contains(n) && pDuckQ.contains(n)).toSeq.sorted
-                      val addedM = (both -- common.toSet).toSeq.sorted
-                      val sDelta = common.map(n => sparkPer(n) - pSpark(n)).sum
-                      val dDelta = common.map(n => duckPer(n) - pDuckQ(n)).sum
-                      val movers = common
-                        .map(n => (n, sparkPer(n) - pSpark(n), duckPer(n) - pDuckQ(n)))
-                        .sortBy { case (_, sd, dd) => -(math.abs(sd) + math.abs(dd)) }
-                        .take(10)
-                        .map { case (n, sd, dd) =>
-                          s""""$n":{"spark_prior_s":${"%.3f".format(pSpark(n))},"spark_this_s":${"%.3f".format(sparkPer(n))},"spark_delta_s":${"%.3f".format(sd)},"duckdb_prior_s":${"%.3f".format(pDuckQ(n))},"duckdb_this_s":${"%.3f".format(dd + pDuckQ(n))},"duckdb_delta_s":${"%.3f".format(dd)}}"""
-                        }.mkString("{", ",", "}")
-                      val thisRatioStr =
-                        "\"ratio\"\\s*:\\s*([0-9.]+)".r
-                          .findFirstMatchIn(subsetSummary).map(_.group(1))
-                          .getOrElse("null")
-                      s""","subset_decomposition":{"prior":"bench_history/BENCH_FULL_r$prn.json","prior_subset_ratio":${pRatio.map("%.2f".format(_)).getOrElse("null")},"this_subset_ratio":$thisRatioStr,"common_n":${common.size},"members_added_this_round":${addedM.map("\"" + _ + "\"").mkString("[", ",", "]")},"common_spark_delta_sum_s":${"%.3f".format(sDelta)},"common_duckdb_delta_sum_s":${"%.3f".format(dDelta)},"top_movers":$movers,"note":"deltas over members present in BOTH rounds; members_added plus duckdb-side deltas are the composition/oracle share of a subset-ratio move"}"""
-                    }
-                }
-              } catch { case e: Throwable =>
-                s""","subset_decomposition_error":"${jesc(s"${e.getClass.getSimpleName}: ${e.getMessage}")}""""
-              }
-            }.getOrElse(s""","subset_decomposition_error":"no duckdb baseline ran this pass"""")
-            (pSeq, pDuck, duckWarmWall) match {
-              case (Some(ps), Some(pd), Some(dw)) =>
-                val base =
-                  s""","prior_round_comparison":{"prior":"BENCH_r$rn.json","prior_wall_seq_s":${"%.3f".format(ps)},"this_wall_seq_s":${"%.3f".format(wallSeq)},"seq_delta_pct":${"%.1f".format((wallSeq - ps) / ps * 100)},"prior_duckdb_warm_s":${"%.3f".format(pd)},"this_duckdb_warm_s":${"%.3f".format(dw)},"structural_changes":"$changes""""
-                val sweepKeys = sweepSeq.map { case (sw, swHead) =>
-                  val dThis = (wallSeq - ps) / ps
-                  val dSweep = (sw - ps) / ps
-                  // the cross-check is only meaningful when the sweep
-                  // measured THIS code: r16's flag compared this
-                  // round's run against the prior round's sweep
-                  // (vacuous agreement). A sweep artifact without a
-                  // head key, or with a different head, is stale.
-                  val fresh = swHead.exists(sourceUnchangedSince)
-                  val agree =
-                    if (fresh) (dThis * dSweep >= 0).toString else "null"
-                  s""","sweep_wall_seq_s":${"%.3f".format(sw)},"sweep_vs_prior_delta_pct":${"%.1f".format(dSweep * 100)},"sweep_head":${swHead.map("\"" + _ + "\"").getOrElse("null")},"sweep_stale":${!fresh},"signs_agree_with_sweep":$agree,"note":"both deltas are vs the prior round; the agreement flag is null unless src/main+build.sbt are diff-identical between BENCH_SCALE.json's head and this run's HEAD — disagreement then marks one of the two same-code runs as box noise"""".stripMargin
-                }.getOrElse("")
-                base + sweepKeys + subsetCmp + "}"
-              case _ => ""
-            }
-          }
-        case None => ""
-      }
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] prior-round comparison FAILED: ${e.getMessage}"); ""
-    }
-
     // Shared headline keys. Since round 4 the wall key is named for
     // what it measures (post-warmup concurrent wall, not cold), the
     // artifact carries a schema_version, and `queries` is explicitly
@@ -1655,13 +809,13 @@ object Bench {
     val headline =
       s""""value":${"%.3f".format(wallPar)},"unit":"sec","schema_version":8,"run_head":${runHead.map("\"" + _ + "\"").getOrElse("null")},"run_tree_dirty":$treeDirty,"wall_par${par}_postwarm_sec":${"%.3f".format(wallPar)},"wall_par${par}_coldplans_sec":${"%.3f".format(wallParCold)},"wall_seq_warm_sec":${"%.3f".format(wallSeq)},"sum_query_sec":${"%.3f".format(good.map(_.sec).sum)},"parallelism":$par,"n_queries":${outSeq.size},"queries_methodology":"seq_warm_par1_min2_min3_top15_and_ge0p8","jvm_max_heap_mb":${Runtime.getRuntime.maxMemory() >> 20},"idle_gate":$gate,"load_before":$loadBefore,"load_after":$loadAfter"""
     val json =
-      s"""{"metric":"total",$headline,"queries":$qs,"errors":$errs,"errors_par_only":$parOnlyErrs,"excluded_queries":$excludedJson$onlyJson,"skipped_blocks":${skippedBlocks.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")}$duck$vector$skew$pcAb$scanFloor$dljAb$a6Floor$q3Floor$asofFloor$a8Fixed$probePaths$probeDegrade$tsDecodeAb$dedupStage$segTp$stState$clusterProbe$suiteFixedCost$priorCmp,"sf":"$sfDir"}"""
+      s"""{"metric":"total",$headline,"queries":$qs,"errors":$errs,"errors_par_only":$parOnlyErrs,"excluded_queries":$excludedJson$onlyJson,"skipped_blocks":${skippedBlocks.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")}$duck$vector$probeDegrade$segTp$stState$clusterProbe$suiteFixedCost,"sf":"$sfDir"}"""
     Files.writeString(
       Paths.get(sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_LOCAL.json")), json)
     // committed full-artifact sidecar (r16 judge item #3): the driver's
     // BENCH_r{N}.json keeps only the compact tail line, so the full
-    // per-query spark+duckdb maps were lost to history and the
-    // round-over-round decomposition had nothing to diff against.
+    // per-query spark+duckdb maps were lost to history and rounds
+    // could not be compared query by query.
     // Every sf0.1 run refreshes _latest; the round snapshot commits it
     // (renamed BENCH_FULL_r{N}.json once the round number is known).
     // Gated on sf0.1 so sweep points at other scales don't clobber it.

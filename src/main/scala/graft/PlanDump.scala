@@ -36,14 +36,16 @@ object PlanDump {
       "254 MB UnsafeRow broadcast, no serial HashedRelation build (the r12 " +
       "join_floor_profile measured that chain at 0.80 s build + 0.26 s " +
       "transmit, ~60% of the broadcast join's wall at the 100x point; " +
-      "dense_lookup_ab in the bench artifact carries the A/B). The codes " +
+      "Bench's former dense_lookup_ab block carried the A/B; its last " +
+      "values are in bench_history/BENCH_FULL_latest.json). The codes " +
       "array AND the dictionary are built in ONE distributed pass (r14; " +
       "r13 ran a sizing aggregate + a distinct() dictionary job + a fill " +
       "pass): per-partition local codes arrays with insertion-order local " +
       "dictionaries, merged with code remapping on the driver — never a " +
       "dim row, never a distinct job). " +
       "Skew cannot exist because nothing shuffles; the big-x-big skew case " +
-      "remains Relational.skewJoin, timed by skew_join_planted."),
+      "remains Relational.skewJoin (its last planted-skew timings are in " +
+      "bench_history/BENCH_FULL_latest.json)."),
     "v1_knn" -> ("Brute-force kNN: pruned parquet scan (ReadSchema = id+embedding " +
       "only), the query vector inlined as a plan literal, native codegen " +
       "`cosinesimilarity`, and TakeOrderedAndProject — per-partition top-k, " +
@@ -61,9 +63,10 @@ object PlanDump {
       "AND the r15 broadcast-exchange collect are gone. Since r16 the two " +
       "eager bitmap builds are memoized per canonicalized keys plan " +
       "(reuse=true, LRU 8), so re-executions of the same logical query " +
-      "stop re-paying them. BENCH's q3_stage_floor prices every stage " +
-      "(bare 4-col filtered scan -> +probe -> +agg/top10 -> full) at " +
-      "every sweep point."),
+      "stop re-paying them. ProfileQuery's per-operator record splits " +
+      "the time (scan, probe filter, keyed agg, top-10, attach) off the " +
+      "executed plans; the last q3_stage_floor numbers are in " +
+      "bench_history/BENCH_FULL_latest.json."),
     "j1_equijoin" -> ("Dense dictionary-lookup join on the reference J1 shape " +
       "(r14): attaching c_mktsegment (5 values) to orders on the dense " +
       "customer PK plans as a codegen `dense_lookup` probe of a " +
@@ -87,8 +90,10 @@ object PlanDump {
       "interpolation window share a single shuffle — plan-pinned <=1 " +
       "Exchange by PlanSpec. Map-side combine moves post-shuffle, " +
       "acceptable behind the ~99.5%-selective filter and documented at " +
-      "the call site. BENCH's a8_fixed_cost prices the remaining 2 jobs " +
-      "against the no-file job floor (at sf0.1 a8 sits AT the floor)."),
+      "the call site. ProfileQuery reports the remaining jobs and " +
+      "per-operator metrics; the last a8_fixed_cost reading (2 jobs, " +
+      "a8 AT the no-file job floor at sf0.1) is in " +
+      "bench_history/BENCH_FULL_latest.json."),
     "range_join" -> ("No-equi-key time-proximity COUNT: both sides collapse to " +
       "one row per tolerance bucket (sorted timestamp array / density-" +
       "bounded probe chunks of <=maxProbesPerChunk rows each), " +
@@ -114,8 +119,9 @@ object PlanDump {
       "second scan and its pre-agg shuffle are gone. Equal-(key, ts) " +
       "right rows resolve via rTieBreak sort columns inside the same " +
       "window; disjointness of the side predicates is raise_error-" +
-      "enforced per row (r17). BENCH's asof_floor prices bare scan -> " +
-      "+window -> full at every sweep point."),
+      "enforced per row (r17). ProfileQuery's per-operator record splits " +
+      "scan, window and final sort; the last asof_floor numbers are in " +
+      "bench_history/BENCH_FULL_latest.json."),
     "ann_autoswap" -> ("Plan-level ANN auto-swap: the query is the declarative " +
       "sql_knn shape (ORDER BY cosine DESC LIMIT k, no cluster predicate); " +
       "RewriteCosineTopKToProbes injects `cluster IN (nprobe nearest " +

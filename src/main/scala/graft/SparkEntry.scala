@@ -439,8 +439,9 @@ object SparkEntry {
       // denseLookupJoin replaces it with a span-bytes dictionary-code
       // array built in one distributed pass and probed inside the
       // orders scan — no join operator, no shuffle of either side
-      // (PlanSpec-pinned; dense_lookup_ab measured the same conversion
-      // at 1.87× on a 3 M-row dim).
+      // (PlanSpec-pinned; Bench's former dense_lookup_ab block measured
+      // the same conversion at 1.87× on a 3 M-row dim — its last values
+      // are in bench_history/ and BENCH_SCALE.json).
       val o = t(s, d, "orders")
       val c = t(s, d, "customer")
       Relational.denseLookupJoin(o, c, "o_custkey", "c_custkey", "c_mktsegment")
@@ -562,8 +563,10 @@ object SparkEntry {
       // reuse = true (r15 judge item #3): the two probe structures are
       // memoized per canonicalized keys plan, so re-executions of a
       // re-CONSTRUCTED q3 (every bench timing pass) stop re-paying the
-      // two eager build jobs — the q3_stage_floor block priced them at
-      // most of the +0.58 s probe-stage residual over the bare scan
+      // two eager build jobs — Bench's former q3_stage_floor block
+      // priced them at most of the +0.58 s probe-stage residual over
+      // the bare scan (last values in bench_history/; ProfileQuery's
+      // per-operator record re-derives the split)
       val ocKeys = Relational.bitmapSemiJoin(o, c, "o_custkey", "c_custkey",
           reuse = true)
         .select(col("o_orderkey"))
@@ -1062,8 +1065,9 @@ object SparkEntry {
       // measurement (r12 join_floor_profile + judge item #5):
       //  (a) profile-gated SALTING (Relational.skewJoin) when BOTH
       //      sides must shuffle — the 100 TB big⋈big posture, timed on
-      //      a planted-skew corpus in the bench artifact
-      //      (skew_join_planted: straggler spread across salt buckets);
+      //      a planted-skew corpus by Bench's former skew_join_planted
+      //      block (straggler spread across salt buckets; last values in
+      //      bench_history/BENCH_FULL_latest.json and BENCH_SCALE.json);
       //  (b) broadcast hash join when the dim fits the budget — but
       //      its driver chain is SERIAL: 0.80 s UnsafeRow
       //      HashedRelation build + 0.26 s transmit of 254 MB for this
@@ -1077,8 +1081,9 @@ object SparkEntry {
       //      lineitem scan: NO join operator, no fact shuffle, skew
       //      cannot exist because nothing shuffles (PlanSpec pins the
       //      join-free plan). Result equals the plain inner join
-      //      (RelationalSpec); the old-vs-new walls are A/B'd in the
-      //      bench artifact (dense_lookup_ab).
+      //      (RelationalSpec); the old-vs-new walls were A/B'd by
+      //      Bench's former dense_lookup_ab block (last values in
+      //      bench_history/BENCH_FULL_latest.json and BENCH_SCALE.json).
       val big = t(s, d, "lineitem").select("l_orderkey", "l_extendedprice")
       val small = t(s, d, "orders").filter(col("o_orderpriority") === "1-URGENT")
         .select(col("o_orderkey"), col("o_orderpriority"))

@@ -284,7 +284,8 @@ object Dedup {
     * TextScanSpec); [[simhashUdf]] above stays as the reference
     * semantics. At x1000 the UDF's per-token 64-iteration counter loop
     * plus the String decode was 95 % of simhash_neardups' 3.9 s
-    * (dedup_stage_floor). */
+    * (Bench's former dedup_stage_floor block; its last values are in
+    * BENCH_SCALE.json). */
   def simhash(text: Column): Column =
     // coalesce preserves the UDF's null contract (null text → sketch 0)
     coalesce(graft.plans.TextScan.simhash(text), lit(0L))

@@ -148,8 +148,8 @@ case class LongSetContains(child: Expression,
   * land inside the last allocated word read stored 0 → −1, so the
   * range check only guards the array index. Null keys yield null
   * (inner joins never match null). `toString` stays "dense_lookup"
-  * — the plan pins (PlanSpec, probe_paths) key on that marker, and
-  * the packed form IS the same probe. */
+  * — the plan pins (PlanSpec, Bench's cluster_shape_probe) key on
+  * that marker, and the packed form IS the same probe. */
 case class DensePackedLookup(child: Expression,
                              codes: Broadcast[Array[Long]],
                              min: Long,

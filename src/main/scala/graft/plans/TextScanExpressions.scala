@@ -15,7 +15,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * decode-copy per row before doing any work — at the 17 GB sweep
   * point that boundary was ~all of lang_stopwords' 4.8 s (6.2×) and
   * the dominant residual of simhash's 3.9 s (95 % sketch scan per
-  * `dedup_stage_floor`).
+  * Bench's former `dedup_stage_floor` block; its last values are in
+  * BENCH_SCALE.json).
   *
   * LOCALE: non-ASCII fallbacks lower with Locale.ROOT, same contract
   * as [[graft.operators.Dedup.tokenHashes]] (r18 advisory) and the

@@ -34,8 +34,7 @@ class ArtifactHonestySpec extends AnyFunSuite {
       assert(node.has("points") && node.get("points").isArray,
         "BENCH_SCALE.json has no points array")
       // a sweep without a head key cannot be told apart from a stale
-      // one — Bench's prior_round_comparison marks such sweeps stale,
-      // and regenerating via scripts/run_scale.sh embeds the key
+      // one; regenerating via scripts/run_scale.sh embeds the key
       assert(node.has("head") && !node.get("head").isNull &&
         node.get("head").asText().matches("[0-9a-f]{40}"),
         "BENCH_SCALE.json carries no git head — regenerate with scripts/run_scale.sh " +
